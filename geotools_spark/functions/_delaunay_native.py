@@ -17,21 +17,18 @@ elementwise evaluation order. tests/test_properties.py pins
 triangle-for-triangle equality against the NumPy loop across random
 and degenerate inputs.
 
-Compilation happens once per machine into a content-hashed .so under
-the system temp dir (atomic rename; concurrent compiles race benignly).
-No compiler / any failure -> ``get_lib()`` returns None and callers
-keep the NumPy loop.
+Compilation happens once per user into a content-hashed .so
+(``geotools_spark._native``). No compiler / any failure ->
+``get_lib()`` returns None and callers keep the NumPy loop.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
 
 import numpy as np
+
+from geotools_spark import _native
 
 _C_SOURCE = r"""
 #include <stdlib.h>
@@ -217,44 +214,14 @@ _lib = None
 _lib_tried = False
 
 
-def _so_path() -> str:
-    tag = hashlib.md5((_C_SOURCE + " ".join(_CFLAGS)).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"geotools_delaunay_{tag}.so")
-
-
-def _compile() -> str | None:
-    so = _so_path()
-    if os.path.exists(so):
-        return so
-    try:
-        fd, csrc = tempfile.mkstemp(suffix=".c")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(_C_SOURCE)
-        tmp_so = so + f".tmp{os.getpid()}"
-        subprocess.run(
-            ["gcc", *_CFLAGS, "-o", tmp_so, csrc],
-            check=True, capture_output=True, timeout=120,
-        )
-        os.replace(tmp_so, so)  # atomic: concurrent compiles race benignly
-        os.unlink(csrc)
-        return so
-    except Exception:
-        return None
-
-
 def get_lib():
     """ctypes handle to the compiled kernel, or None (no gcc / failed)."""
     global _lib, _lib_tried
     if _lib_tried:
         return _lib
     _lib_tried = True
-    if os.environ.get("GEOTOOLS_SPARK_NO_NATIVE") == "1":
-        return None
-    so = _compile()
-    if so is None:
-        return None
-    try:
-        lib = ctypes.CDLL(so)
+    lib = _native.load("delaunay", _C_SOURCE, _CFLAGS)
+    if lib is not None:
         lib.delaunay_bw.restype = ctypes.c_int
         lib.delaunay_bw.argtypes = [
             ctypes.POINTER(ctypes.c_double),
@@ -269,9 +236,7 @@ def get_lib():
         ]
         lib.delaunay_free.restype = None
         lib.delaunay_free.argtypes = [ctypes.POINTER(ctypes.c_int64)]
-        _lib = lib
-    except Exception:
-        _lib = None
+    _lib = lib
     return _lib
 
 

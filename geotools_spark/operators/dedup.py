@@ -43,13 +43,12 @@ def _pin_small(df: DataFrame, cap_bytes: int = 2 << 30) -> DataFrame:
     (no cross-branch CSE), so an unpinned signature/shingle table is
     computed once per side. When Catalyst's size estimate says the
     SOURCE is small, a localCheckpoint turns the second computation
-    into a cache read; above the cap (or with no estimate) the 100 TB
-    behaviour — recompute per branch, no executor-memory
-    materialization — is kept unchanged."""
+    into a cache read; above the cap the 100 TB behaviour — recompute
+    per branch, no executor-memory materialization — is kept
+    unchanged."""
     from geotools_spark.operators.partitioning import plan_size_bytes
 
-    est = plan_size_bytes(df)
-    if est is not None and est < cap_bytes:
+    if plan_size_bytes(df) < cap_bytes:
         return df.localCheckpoint(eager=True)
     return df
 

@@ -20,58 +20,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, factor: int = 1, *, narrow: bool | None = None) -> DataFrame:
+def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     """Round-robin repartition to cluster parallelism when the input
     arrives in fewer partitions — single-row-group parquet files (and
     any small compacted table) scan as ONE task, and every narrow
     transformation downstream (span explode, expression derivation,
     shuffle write) inherits that. No-op when the source is already
-    wide, so a large multi-split scan pays nothing.
-
-    ``narrow`` lets the caller declare the source shape (True: always
-    spread, False: never) without a plan probe.  When None, we probe
-    ``df.rdd`` — an analysis round-trip, and unavailable under Spark
-    Connect, in which case we conservatively spread (the repartition is
-    the whole point at small partition counts; a wide source under
-    Connect should pass ``narrow=False``)."""
-    if narrow is False:  # before any sparkContext touch: Connect-safe
-        return df
+    wide, so a large multi-split scan pays nothing."""
     par = default_parallelism(df.sparkSession) * factor
-    if narrow is None:
-        try:
-            if df.rdd.getNumPartitions() >= par:
-                return df
-        except Exception:
-            pass  # Spark Connect: no RDD API — fall through and spread
+    if df.rdd.getNumPartitions() >= par:
+        return df
     return df.repartition(par)
 
 
 def default_parallelism(spark) -> int:
-    """Cluster parallelism, Connect-tolerant: prefer the SparkContext
-    (classic), fall back to session conf (Connect has no sparkContext),
-    then to shuffle partitions as the last planning hint."""
-    try:
-        return int(spark.sparkContext.defaultParallelism)
-    except Exception:
-        pass
-    for key in ("spark.default.parallelism", "spark.sql.shuffle.partitions"):
-        try:
-            v = spark.conf.get(key, None)
-            if v:
-                return int(v)
-        except Exception:
-            continue
-    return 200
+    return int(spark.sparkContext.defaultParallelism)
 
 
-def plan_size_bytes(df: DataFrame) -> int | None:
+def plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for ``df`` (optimized-plan stats —
-    file sizes for scans, row-width products for local relations).
-    None when the internal API is unavailable (Spark Connect)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
+    file sizes for scans, row-width products for local relations)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 _UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -100,8 +69,6 @@ def fanout_partitions(
     spark = df.sparkSession
     par = default_parallelism(spark)
     size = plan_size_bytes(df)
-    if size is None:
-        return par * 2  # Connect / no stats: the old fixed heuristic
     advisory = _parse_bytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
     )

@@ -105,16 +105,27 @@ QUANT_SEED = 1299709
 # oracle replay (parity pinned by tests/test_oracle_parity.py).
 
 def _np_vectors(col) -> np.ndarray:
-    """pyarrow (Chunked)ListArray of floats -> (n, dim) float64."""
+    """pyarrow (Chunked)ListArray of floats -> (n, dim) float64. Every
+    row must be a non-null list of one common length with no null
+    elements: ``flatten()`` drops nulls, so a ragged or null row would
+    otherwise shift every later row's values."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     a = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    flat = a.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     n = len(a)
     if n == 0:
-        return flat.reshape(0, 0)
-    dim = len(flat) // n
-    return flat.reshape(n, dim)
+        return np.empty((0, 0), dtype=np.float64)
+    lens = pc.list_value_length(a)
+    if lens.null_count:
+        raise ValueError(f"vector column has {lens.null_count} null rows")
+    dims = np.unique(lens.to_numpy())
+    if len(dims) != 1:
+        raise ValueError(f"ragged vector column: row lengths {dims.tolist()}")
+    flat = a.flatten()
+    if flat.null_count:
+        raise ValueError(f"vector column has {flat.null_count} null elements")
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, int(dims[0]))
 
 
 def _np_left_fold_sq(X: np.ndarray, c: np.ndarray) -> np.ndarray:

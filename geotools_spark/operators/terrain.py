@@ -153,16 +153,13 @@ def normalize_heights(
     # directions, so the probe is gated on Catalyst's size estimate:
     # below split_min_bytes the worst possible hot cell is a couple of
     # seconds of kernel time and the pre-split plan is emitted
-    # unchanged; above it (or when the estimate is unavailable) the
-    # probe's relative cost is a few percent and it always runs.
+    # unchanged; above it the probe's relative cost is a few percent
+    # and it always runs.
     # An EXPLICIT split_target always probes (the parity test's hook).
     from geotools_spark.operators.partitioning import plan_size_bytes
 
     split_min_bytes = 4 << 30
-    est = plan_size_bytes(points)
-    probe = (
-        split_target is not None or est is None or est >= split_min_bytes
-    )
+    probe = split_target is not None or plan_size_bytes(points) >= split_min_bytes
     hot_rows = []
     if probe:
         target = split_target if split_target else 50_000

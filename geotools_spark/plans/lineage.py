@@ -14,6 +14,12 @@ Layout of a checkpointed table at ``path``:
   path/_lineage/...parquet            -- (run_id, part_key, rows, wall_s, ts)
   path/_manifest.json                 -- {"runs": [...], "completed": {key: run_id}}
 
+Every write starts with one ``groupBy(part).count()`` of its input.
+Keys the manifest does not list yet are pending; that one result says
+whether to write at all, whether to filter to the pending keys, and
+what the lineage rows and the manifest entry record. A resume of a
+fully committed table costs that count and nothing else.
+
 The partition column is typically a coarse cell-key prefix
 (``zkey >> 2*delta``) so that (a) resume granularity is spatial, (b)
 downstream readers get partition pruning on cell ranges — the Spark
@@ -55,8 +61,45 @@ def read_manifest(path: str) -> dict:
     return {"runs": [], "completed": {}}
 
 
-def completed_keys(path: str) -> set[str]:
-    return set(read_manifest(path)["completed"])
+def _replace_manifest(path: str, manifest: dict) -> None:
+    os.makedirs(path, exist_ok=True)
+    tmp = _manifest_path(path) + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh, indent=1)
+    os.replace(tmp, _manifest_path(path))
+
+
+def _append_lineage(spark: SparkSession, path: str, rows: list[tuple]) -> None:
+    if rows:
+        spark.createDataFrame(
+            rows, "run_id string, part_key string, rows long, wall_s double, ts double"
+        ).coalesce(1).write.mode("append").parquet(os.path.join(path, "_lineage"))
+
+
+def _checkpointed(df: DataFrame, path: str, part_col: str, run_id: str,
+                  layout=lambda todo: todo) -> dict:
+    """One ``groupBy(part).count()`` decides the run: keys not yet in
+    the manifest are pending. No pending key -> no write at all; every
+    key pending -> ``df`` is written unfiltered; otherwise it is
+    filtered to the pending keys. ``layout`` shapes the frame to write
+    (after that filter). Lineage rows and the manifest entry carry the
+    same counts."""
+    manifest = read_manifest(path)
+    key = F.col(part_col).cast("string")
+    counts = dict(df.groupBy(key).count().collect())
+    pending = {k: n for k, n in counts.items() if k not in manifest["completed"]}
+    t0 = time.time()
+    if pending:
+        todo = df if len(pending) == len(counts) else df.filter(key.isin(list(pending)))
+        layout(todo).write.partitionBy(part_col).mode("append").parquet(path)
+    wall, ts = time.time() - t0, time.time()
+    _append_lineage(df.sparkSession, path,
+                    [(run_id, k, n, wall, ts) for k, n in pending.items()])
+    manifest["completed"].update(dict.fromkeys(pending, run_id))
+    manifest["runs"].append({"run_id": run_id, "ts": ts, "partitions": len(pending),
+                             "rows": sum(pending.values()), "wall_s": round(wall, 3)})
+    _replace_manifest(path, manifest)
+    return manifest["runs"][-1]
 
 
 def checkpointed_write(
@@ -68,53 +111,10 @@ def checkpointed_write(
 ) -> dict:
     """Write ``df`` partitioned by ``part_col``, skipping partitions a
     previous run already committed; append per-partition lineage rows
-    and advance the manifest snapshot. Returns the run summary.
-
-    The skip is a partition-pruned anti-filter (``~isin(completed)``) —
-    at 10^12 docs the pruned partitions never leave the scan."""
-    spark = df.sparkSession
+    and advance the manifest snapshot. Returns the run summary. A
+    fully committed table costs one per-key count and nothing else."""
     path = require_local_path(path, "checkpointed_write")
-    os.makedirs(path, exist_ok=True)
-    manifest = read_manifest(path)
-    done = set(manifest["completed"])
-    pending = df
-    if done:
-        pending = df.filter(~F.col(part_col).cast("string").isin(sorted(done)))
-
-    t0 = time.time()
-    pending.write.partitionBy(part_col).mode("append").parquet(path)
-    wall = time.time() - t0
-
-    # per-partition lineage: rows per committed partition in this run
-    stats = (
-        pending.groupBy(F.col(part_col).cast("string").alias("part_key"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    )
-    lineage_rows = [
-        (run_id, r.part_key, int(r.rows), float(wall), time.time()) for r in stats
-    ]
-    if lineage_rows:
-        spark.createDataFrame(
-            lineage_rows, "run_id string, part_key string, rows long, wall_s double, ts double"
-        ).coalesce(1).write.mode("append").parquet(os.path.join(path, "_lineage"))
-
-    for r in stats:
-        manifest["completed"][r.part_key] = run_id
-    manifest["runs"].append(
-        {
-            "run_id": run_id,
-            "ts": time.time(),
-            "partitions": len(stats),
-            "rows": int(sum(r.rows for r in stats)),
-            "wall_s": round(wall, 3),
-        }
-    )
-    tmp = _manifest_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, _manifest_path(path))
-    return manifest["runs"][-1]
+    return _checkpointed(df, path, part_col, run_id)
 
 
 def write_cell_partitioned(
@@ -131,15 +131,15 @@ def write_cell_partitioned(
     each task writes one coherent spatial region), then written
     partitioned by the level-(L-delta) parent key — the directory
     partition column that gives readers cell-range pruning (the
-    SpatiaLite R-tree's job, include/sqlite.hpp:20-142). Goes through
-    checkpointed_write, so resume/lineage apply."""
-    parent = F.shiftright(F.col(zkey_col), 2 * level_delta).alias("cell_part")
-    keyed = df.withColumn("cell_part", parent)
-    spread = keyed.repartitionByRange(
-        max(df.sparkSession.sparkContext.defaultParallelism, 4),
-        F.col(zkey_col),
-    )
-    return checkpointed_write(spread, path, part_col="cell_part", run_id=run_id)
+    SpatiaLite R-tree's job, include/sqlite.hpp:20-142). Same
+    resume/lineage contract as checkpointed_write; the per-key count
+    and the pending-key filter run BEFORE the range repartition, so a
+    resume never samples or shuffles committed rows."""
+    path = require_local_path(path, "write_cell_partitioned")
+    n = max(df.sparkSession.sparkContext.defaultParallelism, 4)
+    keyed = df.withColumn("cell_part", F.shiftright(F.col(zkey_col), 2 * level_delta))
+    return _checkpointed(keyed, path, "cell_part", run_id,
+                         lambda todo: todo.repartitionByRange(n, F.col(zkey_col)))
 
 
 def compact_partitions(
@@ -232,17 +232,10 @@ def compact_partitions(
              float(time.time() - t0), time.time())
         )
 
-    if lineage_rows:
-        spark.createDataFrame(
-            lineage_rows,
-            "run_id string, part_key string, rows long, wall_s double, ts double",
-        ).coalesce(1).write.mode("append").parquet(os.path.join(path, "_lineage"))
+    _append_lineage(spark, path, lineage_rows)
     manifest = read_manifest(path)
     manifest["runs"].append({**summary, "ts": time.time()})
-    tmp = _manifest_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, _manifest_path(path))
+    _replace_manifest(path, manifest)
     return summary
 
 

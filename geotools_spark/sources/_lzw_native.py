@@ -6,18 +6,16 @@ strip — and the synthetic media generator encodes several LZW TIFFs per
 query. This compiles the IDENTICAL greedy LZW (TIFF 6.0 §13, early
 change, reset at 4094) to C; greedy LZW is deterministic, so the
 output stream is byte-for-byte the Python encoder's (pinned by
-tests/test_codecs_property.py). Same compile-once machinery as
-functions/_delaunay_native; no compiler -> callers keep the Python
+tests/test_codecs_property.py). Compiled once per user by
+``geotools_spark._native``; no compiler -> callers keep the Python
 loop.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
+
+from geotools_spark import _native
 
 _C_SOURCE = r"""
 #include <stdlib.h>
@@ -94,50 +92,18 @@ _lib = None
 _lib_tried = False
 
 
-def _so_path() -> str:
-    tag = hashlib.md5((_C_SOURCE + " ".join(_CFLAGS)).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"geotools_lzw_{tag}.so")
-
-
-def _compile() -> str | None:
-    so = _so_path()
-    if os.path.exists(so):
-        return so
-    try:
-        fd, csrc = tempfile.mkstemp(suffix=".c")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(_C_SOURCE)
-        tmp_so = so + f".tmp{os.getpid()}"
-        subprocess.run(
-            ["gcc", *_CFLAGS, "-o", tmp_so, csrc],
-            check=True, capture_output=True, timeout=120,
-        )
-        os.replace(tmp_so, so)
-        os.unlink(csrc)
-        return so
-    except Exception:
-        return None
-
-
 def get_lib():
     global _lib, _lib_tried
     if _lib_tried:
         return _lib
     _lib_tried = True
-    if os.environ.get("GEOTOOLS_SPARK_NO_NATIVE") == "1":
-        return None
-    so = _compile()
-    if so is None:
-        return None
-    try:
-        lib = ctypes.CDLL(so)
+    lib = _native.load("lzw", _C_SOURCE, _CFLAGS)
+    if lib is not None:
         lib.lzw_encode.restype = ctypes.c_int64
         lib.lzw_encode.argtypes = [
             ctypes.c_char_p, ctypes.c_int64, ctypes.POINTER(ctypes.c_ubyte)
         ]
-        _lib = lib
-    except Exception:
-        _lib = None
+    _lib = lib
     return _lib
 
 

@@ -289,6 +289,24 @@ def test_probe_masks_generalize_beyond_two_flips():
     assert len(set(probe_masks(8, 3))) == len(probe_masks(8, 3))
 
 
+def test_np_vectors_rejects_ragged_and_null_rows():
+    import numpy as np
+    import pyarrow as pa
+
+    from geotools_spark.operators.similarity import _np_vectors
+
+    ok = pa.chunked_array([[[1.0, 2.0], [3.0, 4.0]], [[5.0, 6.0]]])
+    assert np.array_equal(_np_vectors(ok), [[1, 2], [3, 4], [5, 6]])
+    assert np.array_equal(_np_vectors(pa.array([[1.0, 2.0], [3.0, 4.0]])[1:]), [[3, 4]])
+    # 6 values over 3 rows would reshape to (3, 2) and misalign every row
+    with pytest.raises(ValueError, match="ragged"):
+        _np_vectors(pa.array([[1.0], [2.0, 3.0, 4.0], [5.0, 6.0]]))
+    with pytest.raises(ValueError, match="null rows"):
+        _np_vectors(pa.array([[1.0, 2.0], None, [3.0, 4.0]]))
+    with pytest.raises(ValueError, match="null elements"):
+        _np_vectors(pa.array([[1.0, None], [3.0, 4.0]]))
+
+
 def test_ivf_pq_ann_join_batch(spark):
     """Batch IVF-PQ join: per-query recall vs exact, self at rank 1,
     rerun-deterministic."""

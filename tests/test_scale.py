@@ -160,6 +160,10 @@ def test_checkpointed_write_resume(spark, tmp_path, skewed_cells):
 
     lin = lineage.read_lineage(spark, path)
     assert {r.run_id for r in lin.collect()} == {"run1", "run3"}
+    # run3's lineage row for the re-written key carries that key's row count
+    want = grid.filter(F.col("part_key").cast("string") == dropped).count()
+    got = [(r.part_key, r.rows) for r in lin.filter(F.col("run_id") == "run3").collect()]
+    assert got == [(dropped, want)]
 
 
 def test_partition_pruning_on_checkpointed_table(spark, tmp_path, skewed_cells):
@@ -305,6 +309,27 @@ def test_cell_partitioned_write_spatial_locality(spark, tmp_path, skewed_cells):
         rd.filter(F.col("cell_part") == one).count()
         == pts.filter(F.shiftright(F.col("zkey"), 8) == one).count()
     )
+
+    # resume on the fully committed table: the per-key count is the only
+    # work (the jobs of one aggregation), no data file, no lineage row
+    def files():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+
+    before, n_lineage = files(), lineage.read_lineage(spark, path).count()
+    sc = spark.sparkContext
+    resume, bare = f"resume-{uuid.uuid4().hex}", f"count-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(resume, "resume of a committed table")
+        again = lineage.write_cell_partitioned(pts, path, level_delta=4, run_id="w2")
+        sc.setJobGroup(bare, "one per-key count")
+        pts.groupBy(F.shiftright("zkey", 8).cast("string")).count().collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert again["rows"] == 0 and again["partitions"] == 0
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup(resume)) == len(tracker.getJobIdsForGroup(bare))
+    assert files() == before
+    assert lineage.read_lineage(spark, path).count() == n_lineage
 
 
 def test_all_sidecar_writers_reject_remote_schemes(spark):
